@@ -832,7 +832,7 @@ object DataQueries {
     // loop (driver actions at build time), so a second call would run
     // the whole LSH-candidates + label-propagation chain again —
     // measured 10 labelSum jobs / 2 full component runs per fate build
-    // before this reuse (JobProbe, sf0.01).
+    // before this reuse (job census at sf0.01: OPTIMIZATION_r16.md §9).
     val cqFull = componentQuality(spark, dir)
     val cq = cqFull
       .select(col("doc_id"), col("component"), col("score"), col("n_low"))
@@ -2608,25 +2608,20 @@ object DataQueries {
     * no shuffle of the corpus. The best-match pick is max(struct) — a
     * map-side-combinable argmax, deterministic via the negated-id
     * tiebreak. */
-  /** The per-doc signature plan of the fuzzy decontaminator — ONE
-    * definition shared with [[graft.FuzzyProbe]] so the probe's numbers
-    * can never drift from the query they justify. */
-  private[graft] def fuzzySigPlan(spark: SparkSession, dir: String): DataFrame =
-    Tables.documentsHot(spark, dir)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        Dedup.minhashSig(TextAnalysis.shingles(col("toks"), 3), K).as("sig"))
-
   private def decontaminateFuzzy(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.ArrEqCountFunctions.register(spark)
     // Memo-persist BARRIER below the ×|eval| expand: inlined, the
     // tokenize→shingle→minhash projection collapses into the join output
-    // and re-evaluates once PER PAIR — FuzzyProbe measured the sig scan
-    // at 2.4 s vs 33-38 s for the joined scoring at sf10 (the round-7
-    // media fan-out pathology, caught again here). The barrier makes the
-    // expand read cached signatures. (Plan built outside the memo call —
-    // a by-name build that itself memoizes nests computeIfAbsent.)
-    val sigsPlan = fuzzySigPlan(spark, dir) // built OUTSIDE the by-name memo
+    // and re-evaluates once PER PAIR — the sig scan measured 2.4 s vs
+    // 33-38 s for the joined scoring at sf10 (BENCH_SCALE.md "Round-9
+    // late additions"; the round-7 media fan-out pathology, caught again
+    // here). The barrier makes the expand read cached signatures. (Plan
+    // built outside the memo call — a by-name build that itself memoizes
+    // nests computeIfAbsent.)
+    val sigsPlan = Tables.documentsHot(spark, dir)
+      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
+      .select(col("doc_id"),
+        Dedup.minhashSig(TextAnalysis.shingles(col("toks"), 3), K).as("sig"))
     val sigs = Tables.memoBy(spark, s"fuzzysigs:$dir")(sigsPlan)
     val evalSigs = sigs.where(col("doc_id") < 10)
       .select(col("doc_id").as("eval_id"), col("sig").as("esig"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.data.Multimodal
@@ -15,12 +14,7 @@ object JpegProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val quality = args.lift(1).map(_.toInt).getOrElse(90)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(32, aqe = true)
     graft.functions.JpegFunctions.register(spark)
     import graft.functions.JpegFunctions._
     val W = Multimodal.BmpWidth

@@ -147,9 +147,9 @@ object MediaQueries {
     * ONCE instead of quadratically. Candidates come ONLY from an
     * equi-join on (band, 14-bit band value) routed through the
     * [[HotBandCap]] guard (never an all-pairs comparison); the exact
-    * Hamming distance is one XOR + popcount per candidate. The
-    * `ImageSkewProbe` measures the collapse + cap under a 10k-identical-
-    * image corpus. Shared by the pair dump and the cluster query. */
+    * Hamming distance is one XOR + popcount per candidate. The collapse
+    * + cap under a 10k-identical-image corpus is measured in COVERAGE.md
+    * "Performance notes". Shared by the pair dump and the cluster query. */
   private[graft] def repPairs(spark: SparkSession, dir: String): DataFrame = {
     val ph = hashedImages(spark, dir).select(col("phash")).distinct()
     val banded = ph.select(col("phash"),

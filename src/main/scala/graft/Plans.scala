@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: `.explain` (SimpleMode) for one query per plan
   * family, with the audit notes each plan must keep satisfying. Run
   * `sbt "runMain graft.Plans"` after changing any of the audited builders.
@@ -271,7 +269,7 @@ object Plans {
       |  (InMemoryTableScan, hashed once) collapses through a distinct
       |  BEFORE banding, so an identical-image mega-cluster — which
       |  shares all four band values — enters the candidate join ONCE
-      |  (`ImageSkewProbe`: 203M naive candidates → 2), and
+      |  (COVERAGE.md performance notes: 203M naive candidates → 2), and
       |  `capHotBuckets` on (band, bv) drops non-discriminative hot
       |  bands. Candidates come from the (band, band-value) EQUI-join —
       |  never an image×image comparison — the exact Hamming check is one
@@ -399,7 +397,7 @@ object Plans {
       |  expand), never a corpus shuffle. The corpus side below the join
       |  must be an InMemoryTableScan of the SIGNATURE memo — with the
       |  sig projection inlined, the expand re-evaluates
-      |  tokenize→shingle→minhash once per pair (FuzzyProbe: 2.4 s scan
+      |  tokenize→shingle→minhash once per pair (BENCH_SCALE.md: 2.4 s scan
       |  vs 33–38 s joined at sf10; barrier = 0.60 s), and the compare is
       |  the compiled arr_eq_count, not an interpreted zip_with.
       |- **data_unigram_em** — both Viterbi rounds are per-row HOF folds
@@ -667,36 +665,36 @@ object Plans {
       |Every O(corpus) global computation in the repo (global aggregates,
       |percentiles, as-of alignment) goes through aggregate + broadcast
       |crossJoin or a partitioned window — the W1 pattern. Probes
-      |(`CmsProbe`) are measurement tools outside the query paths.
+      |(`graft.Probe`) are measurement tools outside the query paths.
       |""".stripMargin
+
+  /** A plan string made readable for an audit: inlined literal vectors
+    * (broadcast centroids/weights) are elided — a k×dim literal fold
+    * prints every double, ballooning the dump to MBs without telling the
+    * auditor anything per-element — and pathological single lines are
+    * capped (a k-cell argmin is ONE Project line whose expression tree
+    * prints hundreds of KB): the audit reads operators and exchanges, not
+    * full expression trees. */
+  private[graft] def compact(plan: String): String =
+    plan.replaceAll("\\[(-?[0-9.E-]+,){8,}-?[0-9.E-]+\\]", "[«literal-vec»]")
+      .linesIterator.map { l =>
+        if (l.length <= 2000) l
+        else l.take(2000) + s" …(+${l.length - 2000} chars)"
+      }.mkString("\n")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores, 8 shuffle partitions: the committed plans' exchange widths
+    // and index file counts follow both (repartition(n) sites read
+    // defaultParallelism, the cores)
+    val spark = Sessions.local(4, aqe = false)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val sections = Audited.map { name =>
       val q = Registry.all.find(_._1 == name)
         .getOrElse(sys.error(s"unknown audited query $name"))._2
-      val plan = q.build(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode)
-        // Compact inlined literal vectors (broadcast centroids/weights):
-        // a k×dim literal fold prints every double, ballooning the dump
-        // to MBs without telling the auditor anything per-element.
-        .replaceAll("\\[(-?[0-9.E-]+,){8,}-?[0-9.E-]+\\]", "[«literal-vec»]")
-        // ...and cap pathological single lines (a k-cell argmin is ONE
-        // Project line whose expression tree prints hundreds of KB): the
-        // audit reads operators and exchanges, not full expression trees.
-        .linesIterator.map { l =>
-          if (l.length <= 2000) l
-          else l.take(2000) + s" …(+${l.length - 2000} chars)"
-        }.mkString("\n")
+      val plan = compact(q.build(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.SimpleMode))
       s"## $name\n\n```\n${plan.trim}\n```\n"
     }
     Files.writeString(Paths.get(out), Header + "\n" + sections.mkString("\n"))

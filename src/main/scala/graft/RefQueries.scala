@@ -305,9 +305,7 @@ object RefQueries {
     * one correctly-rounded division matches DuckDB's decimal→double cast;
     * DECIMAL output would diverge in precision — Spark (18,2)/(28,4) vs
     * DuckDB's sum-widened (38,2)/(38,4) — and fail the driver's
-    * representation-sensitive hash). */
-  /** The cents-scaled aggregate alone — shared with `Q1Probe` so the
-    * probe always times the SHIPPED computation.
+    * representation-sensitive hash).
     *
     * Cents scaling is the FLOOR FORM `(x·100 + 0.5)::long`, not
     * `round(x·100)`: Spark's `Round` routes every double through a
@@ -322,22 +320,19 @@ object RefQueries {
     * the real lineitem measures"), and the DuckDB oracle's native round()
     * differential re-proves at every SF. Negative measures would need
     * the round form back (floor(v+0.5) rounds -2.5 toward +∞). */
-  private[graft] def q1AggBody(src: DataFrame): DataFrame = {
+  private def q1Agg(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     def cents(c: org.apache.spark.sql.Column) =
       (c * 100 + lit(0.5)).cast("long")
     val qtyC = cents(col("l_quantity"))
     val priceC = cents(col("l_extendedprice"))
     val discC = cents(col("l_discount"))
-    src.groupBy(col("l_returnflag"), col("l_linestatus"))
+    Tables.lineitemHot(spark, dir)
+      .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
         sum(qtyC).as("qty_c"),
         sum(priceC).as("price_c"),
         sum(priceC * (lit(100L) - discC)).as("disc_c4"),
         count(lit(1)).as("count_order"))
-  }
-
-  private def q1Agg(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    q1AggBody(Tables.lineitemHot(spark, dir))
       .select(col("l_returnflag"), col("l_linestatus"),
         (col("qty_c").cast("double") / 100).as("sum_qty"),
         (col("price_c").cast("double") / 100).as("sum_base_price"),
@@ -357,7 +352,7 @@ object RefQueries {
     * aggregate (including the otherwise codegen-able count) dropped to
     * the interpreted ObjectHashAggregate path. Split, each pass stays
     * single-width and the distinct pass keeps codegen; measured 6.2×
-    * on the sibling approx query (SketchAggProbe, values
+    * on the sibling approx query (OPTIMIZATION_r16.md §11, values
     * bit-identical; the join key is the ≤3-row status domain). */
   private def sketchStats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(spark, dir)

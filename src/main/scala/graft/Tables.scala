@@ -106,10 +106,11 @@ object Tables {
   /** True when the table's parquet is already a multi-file directory:
     * the scan parallelizes by file, so the parallelism-restoring Hot
     * cache would only add an in-memory columnar decode on top of it —
-    * measured SLOWER than the vectorized parquet reader (`Q1Probe` at
-    * sf10: q1 1.70 s cached vs 1.25 s direct). Single-file driver
-    * testdata keeps the cached path. Applies ONLY to the two Hots whose
-    * sole rationale is scan parallelism (lineitem/orders);
+    * measured SLOWER than the vectorized parquet reader (sf10: q1 1.70 s
+    * cached vs 1.25 s direct; BENCH_SCALE.md "Layout-aware Hot
+    * caches"). Single-file testdata keeps the cached path. Applies
+    * ONLY to the two Hots whose sole rationale is scan parallelism
+    * (lineitem/orders);
     * [[documentsHot]] stays cached at every layout (multi-consumer
     * re-scan avoidance — see its NOTE), as do [[eventsHot]]
     * (pre-hash-partitioned — its cache also removes the per-user
@@ -195,11 +196,12 @@ object Tables {
       // (event_type, user_id) pre-agg (a superset of the partition key)
       // plan as single-stage complete aggregates with NO exchange.
       // Measured at sf0.1: a1 aggregate 0.21 s → one stage (~0.1 s class);
-      // probed in A1Probe. This is the "reuse one partitioning across
-      // stages" play from SURVEY §perf: pay the shuffle once at cache
-      // fill, not per query. user_id is high-cardinality vs 32 partitions,
-      // so balance matches round-robin closely; scenario-keyed consumers
-      // (synthView) still re-shuffle exactly as before.
+      // see BENCH_SCALE.md "The a1 floor, cut". This is the "reuse one
+      // partitioning across stages" play from SURVEY §perf: pay the
+      // shuffle once at cache fill, not per query. user_id is
+      // high-cardinality vs 32 partitions, so balance matches round-robin
+      // closely; scenario-keyed consumers (synthView) still re-shuffle
+      // exactly as before.
       events(spark, dir)
         .repartition(spark.sparkContext.defaultParallelism, col("user_id"))
         .persist()

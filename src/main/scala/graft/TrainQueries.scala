@@ -213,16 +213,16 @@ object TrainQueries {
     * (`defaultParallelism`), not to the oracle's fixed 8 — on a
     * 1000-executor cluster the verify query's 8 buckets would leave 992
     * slots idle through the running-offset window. Same semantics per
-    * bucket; only the degree of independent packing scales. `PackProbe`
-    * measures the knob (8 → 64 buckets) at the scale SFs. */
+    * bucket; only the degree of independent packing scales. The knob
+    * (8 → 64 buckets: 3.3 → 2.5 s at sf10) is measured in BENCH_SCALE.md
+    * "sf10, round-7 late additions". */
   def packSequencesScaled(spark: SparkSession, dir: String): DataFrame =
     packSequencesWith(spark, dir, spark.sparkContext.defaultParallelism)
 
   /** [[packSequences]] at an explicit bucket count — the parallelism
     * knob: buckets pack independently (the running-offset window and the
     * per-sequence assembly both partition by bucket), so a production
-    * run sizes buckets to the cluster, not to the oracle's fixed 8.
-    * `PackProbe` measures the knob at the scale SFs. */
+    * run sizes buckets to the cluster, not to the oracle's fixed 8. */
   def packSequencesWith(spark: SparkSession, dir: String,
                         buckets: Int): DataFrame = {
     Tables.documents(spark, dir)

@@ -128,8 +128,17 @@ object IndexManifest {
   /** The single-writer window was violated: another writer claimed the
     * manifest version this commit computed. Appends catch this inside
     * [[commitDelta]] and rebase; every other mutation fails loudly. */
-  final class ConcurrentWriterException(msg: String)
+  class ConcurrentWriterException(msg: String)
     extends java.io.IOException(msg)
+
+  /** The post-link freshness check retracted this writer's OWN linked
+    * manifest: its claimed name sat at or below the pruned high-water
+    * mark. The one claim failure after which the batch may already have
+    * landed — a healthy publish built on by successors and pruned before
+    * the check ran — so only this one lets [[commitAdded]] treat "the
+    * head carries the batch" as success. */
+  final class RetractedClaimException(msg: String)
+    extends ConcurrentWriterException(msg)
 
   /** A commit's referenced segment file vanished before the claim —
     * either this writer's own not-yet-referenced segment was swept from
@@ -229,14 +238,15 @@ object IndexManifest {
     * sufficiently stale writer (descheduled since before two successor
     * commits and a vacuum) from "winning" a claim at a long-dead
     * version — publishing an invisible zombie manifest whose batch is
-    * silently lost (reproduced by [[graft.SoakProbe]]: commitAdded
-    * returned v2 while the head was v4, because the folder's pruned v2
-    * had freed the name). The mark is the claim floor: vacuum advances
-    * it BEFORE deleting the manifests it pruned, and every claim
-    * verifies `next > mark` before AND after its link — the post-link
-    * check closes the read-then-link window (if the name was recycled,
-    * the mark was already >= next when the link landed, by vacuum's
-    * ordering). Monotone by construction: one empty marker file whose
+    * silently lost (an N-writer soak reproduced it — ROADMAP.md
+    * "Recent", round 16; IndexManifestSpec pins the exact interleaving:
+    * commitAdded returned v2 while the head was v4, because the
+    * folder's pruned v2 had freed the name). The mark is the claim
+    * floor: vacuum advances it BEFORE deleting the manifests it pruned,
+    * and every claim verifies `next > mark` before AND after its link —
+    * the post-link check closes the read-then-link window (if the name
+    * was recycled, the mark was already >= next when the link landed, by
+    * vacuum's ordering). Monotone by construction: one empty marker file whose
     * NAME carries the value, created exclusively, never overwritten;
     * superseded markers are deleted after the higher one exists, so
     * racing vacuums converge on the max without read-modify-write.
@@ -492,7 +502,7 @@ object IndexManifest {
     // the claim so the caller rebases onto the true head.
     if (next <= prunedHighWaterMark(fs, root)) {
       deleteTolerant(fs, dst, recursive = false): Unit
-      throw new ConcurrentWriterException(
+      throw new RetractedClaimException(
         s"stale manifest claim detected after publish: version $next of " +
           s"$path is at or below the vacuumed high-water mark — the name " +
           "was recycled; the zombie manifest was retracted, reload and " +
@@ -660,18 +670,20 @@ object IndexManifest {
         case e: ConcurrentWriterException =>
           attempt += 1
           val now = load(spark, path).getOrElse(throw e)
-          // idempotent landing: the head already carries every file and
-          // artifact pointer of THIS batch (file names and artifact
-          // version dirs are writer-unique, so only this writer's own
-          // commit can have put them there — e.g. a healthy publish
-          // instantly built on by successors and then pruned out from
-          // under the post-claim freshness check). The batch landed;
-          // re-adding it would duplicate.
+          // idempotent landing, after a retracted claim only: this
+          // writer's manifest WAS linked, and the head already carries
+          // every file and artifact pointer of THIS batch (a healthy
+          // publish instantly built on by successors and then pruned out
+          // from under the post-link freshness check). The batch landed;
+          // re-adding it would duplicate. After a plain lost claim the
+          // same containment proves nothing — the winner may reference
+          // these files itself, which the disjointness check refuses.
           // (the batch's segment is NOT deleted here: the successors
           // that carried the batch forward may reference it — if they
           // consolidated instead, it is unreferenced debris the
           // periodic orphan sweep owns)
-          if ((added.nonEmpty || artifacts.nonEmpty) &&
+          if (e.isInstanceOf[RetractedClaimException] &&
+              (added.nonEmpty || artifacts.nonEmpty) &&
               added.forall(now.dataFiles.contains) &&
               artifacts.forall { case (n, rel) =>
                 now.artifacts.get(n).contains(rel) })

@@ -68,7 +68,8 @@ object DedupLatest {
   /** Pre-round-6 formulation of [[latestByScalar]]: N independent NULL-masked
     * `max_by`s. Semantically identical, but the string-typed `Max_By` buffers
     * force SortAggregate (no hash aggregation) — kept only as the parity
-    * reference for DedupLatestSpec and OpProbe A/B numbers. */
+    * reference for DedupLatestSpec and the A/B numbers in BENCH_SCALE.md
+    * "The a1 floor, cut". */
   def latestByScalarMaxBy(df: DataFrame, keys: Seq[String], ord: String, ordKey: Column,
                           payload: Seq[String]): DataFrame = {
     val aggs: Seq[Column] =

@@ -27,7 +27,7 @@ class OperatorSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("floor-form cents equals round-half-up on the real lineitem measures") {
-    // q1AggBody's (x*100 + 0.5)::long replaced round(x*100)::long for the
+    // q1Agg's (x*100 + 0.5)::long replaced round(x*100)::long for the
     // BigDecimal-free codegen path — pin the equivalence precondition
     // (positive, ≤2-decimal measures) against the actual table, plus the
     // exact boundary values the floor form must get right
